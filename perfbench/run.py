@@ -4,17 +4,21 @@ every kernel result, on ``local[<cores>]``.
     python3 perfbench/run.py --workload crawl_pipeline --seed 1 --seconds 20 --trace 0
 
 Run from the root of a source checkout (the package and ``tests/oracles.py``
-are imported from there). Set-up starts the session, writes the seeded inputs
-and runs one untimed warm-up pass (``setup_s``). Then full pipeline passes
-run until ``--seconds`` would be exceeded (at least one), and each end-to-end
-metric is the median over the passes. The outputs of every
-pass are checked against oracles; each kernel result or ingest is one
+are imported from there). Set-up starts the session and writes the seeded
+inputs. Then full pipeline passes run until ``--seconds`` would be exceeded
+(at least one). In the first pass every phase makes untimed warm-up calls
+right before its timed calls; ``setup_s`` is the session start, the input
+writing and those warm-up calls. A pass times the short phases (ingest, and
+wcc on the crawl) more than once and takes each phase's median; each
+end-to-end metric is the median over the passes. The outputs of every timed
+call are checked against oracles; each kernel result or ingest is one
 operation, and a failed check is a failed operation.
 
-``--trace 1`` makes one untraced pass, then one traced pass whose Spark jobs
-carry a job group per layer, and prints the per-layer metrics of
-``BENCHMARK.json``; the difference of the two passes' ``pipeline_s`` is the
-tracing overhead. See ``perfbench/README.md`` for every metric.
+``--trace 1`` makes one pass in which every phase, after its warm-up calls,
+is timed once untraced and once traced with a job group per layer, and
+prints the per-layer metrics of ``BENCHMARK.json``; the difference of the
+traced and the untraced calls' ``pipeline_s`` is the tracing overhead. See
+``perfbench/README.md`` for every metric.
 
 The last line of standard output is one JSON object:
 ``{"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}``.
@@ -33,6 +37,7 @@ import statistics
 import subprocess
 import sys
 import time
+from dataclasses import replace
 from pathlib import Path
 
 T_START = time.perf_counter()
@@ -133,28 +138,32 @@ class Bench:
         write = self.W.write_crawl_input if self.crawl else self.W.write_web_input
         write(self.spark, self.size, self.args.seed, self.input, PARTITIONS)
 
-    def pipeline(self, layer, warmup: bool = False):
+    def pipeline(self, layers: list, warm: bool, single: bool = False):
+        """One pass, with warm-up calls if ``warm``; ``single`` times each
+        phase once per layer context.
+
+        The warm-up calls run on the full input: after a pass on tiny inputs
+        the next full pass still ran ~30% slower than the one after it (JIT),
+        and the kernels' fixed per-call costs make a tiny call nearly as
+        long as a full one."""
         run = self.W.run_crawl if self.crawl else self.W.run_web
-        return run(self.spark, self.warm_size if warmup else self.size, self.input,
-                   str(self.work / "ckpt"), PARTITIONS, layer, warmup)
+        size = replace(self.size, ingests=1, wccs=1) if single else self.size
+        return run(self.spark, size, self.warm_size if warm else None, self.input,
+                   str(self.work / "ckpt"), PARTITIONS, layers)
 
     def setup(self) -> dict[str, float]:
-        """Session up, inputs written, one untimed warm-up pass.
-
-        The warm-up runs on the full input: after a pass on tiny inputs the
-        next full pass still ran ~30% slower than the one after it (JIT),
-        and the kernels' fixed per-call costs make a tiny pass nearly as
-        long as a full one."""
-        from attribution import untraced
-
+        """Session up and inputs written; the warm-up calls come with the
+        first pass and are added in ``with_warmup``."""
         self.spark = self.start_session()
         a = time.perf_counter()
         self.write_inputs()
         b = time.perf_counter()
-        self.report_pass("warm-up", self.pipeline(untraced, warmup=True))
-        c = time.perf_counter()
-        out = {"setup_s": c - T_START, "session.start_s": a - T_START,
-               "session.inputs_s": b - a, "session.warmup_s": c - b}
+        return {"session.start_s": a - T_START, "session.inputs_s": b - a}
+
+    @staticmethod
+    def with_warmup(setup: dict, rep) -> dict[str, float]:
+        out = {**setup, "session.warmup_s": rep.warmup_s}
+        out["setup_s"] = sum(out.values())
         print("set-up " + " ".join(f"{k}={v:.3f}" for k, v in out.items()), flush=True)
         return out
 
@@ -167,10 +176,11 @@ class Bench:
         try:
             setup = self.setup()
             if self.args.trace:
-                plain, traced, tracer = self.traced()
-                reps = [plain, traced]
+                rep, tracer = self.traced()
+                reps = [rep]
             else:
                 reps = self.measure()
+            setup = self.with_warmup(setup, reps[0])
             peak_mb = self.jvm_peak_rss_mb()
             t = time.perf_counter()
             failures = self.check(reps)
@@ -184,7 +194,7 @@ class Bench:
             for op, err in f.items():
                 print(f"check pass={i} {op}: {'ok' if err is None else 'FAILED ' + err}")
         if self.args.trace:
-            metrics = self.per_layer(setup, plain, traced, tracer)
+            metrics = self.per_layer(setup, rep, tracer)
         else:
             metrics = self.end_to_end(setup, reps, peak_mb)
         for name, m in metrics.items():
@@ -194,36 +204,40 @@ class Bench:
         return 0
 
     def measure(self) -> list:
-        """Full passes until the next one would end after --seconds."""
+        """Passes until the next one's timed calls would take the timed
+        total past --seconds; the first pass warms up."""
         from attribution import untraced
 
-        reps = []
-        t0 = time.perf_counter()
+        reps, timed = [], 0.0
         while True:
-            a = time.perf_counter()
-            reps.append(self.pipeline(untraced))
-            last = time.perf_counter() - a
+            reps.append(self.pipeline([untraced], warm=not reps))
+            last = sum(sum(w) for w in reps[-1].walls.values())
+            timed += last
             self.report_pass(len(reps) - 1, reps[-1])
-            if time.perf_counter() - t0 + last > self.args.seconds:
+            if timed + last > self.args.seconds:
                 return reps
 
     @staticmethod
     def report_pass(i, rep) -> None:
-        print(f"pass {i}: " + " ".join(f"{k}={v:.3f}" for k, v in rep.phases.items()))
-        for kernel, results in rep.bsp.items():
-            walls = [round(m["wall_s"], 2) for r in results for m in r.metrics]
-            print(f"pass {i}: {kernel} superstep walls {walls}", flush=True)
+        print(f"pass {i}: warm-up calls {rep.warmup_s:.3f} s; " + " ".join(
+            f"{k}={v:.3f}" for k, v in rep.phases.items()))
+        for phase, walls in rep.walls.items():
+            if len(walls) > 1:
+                print(f"pass {i}: {phase} calls {[round(w, 3) for w in walls]}")
+        for kernel, calls in rep.bsp.items():
+            for bsp in calls:
+                walls = [round(m["wall_s"], 2) for r in bsp for m in r.metrics]
+                if walls:
+                    print(f"pass {i}: {kernel} superstep walls {walls}", flush=True)
 
     def traced(self) -> tuple:
-        """One untraced pass, then one pass traced by job group."""
+        """One pass; each phase is timed untraced, then traced by job group."""
         from attribution import Tracer, untraced
         from graphscope_spark.extract import extract_pages
 
-        plain = self.pipeline(untraced)
-        self.report_pass("untraced", plain)
         tracer = Tracer(self.spark, self.ncpu)
         with tracer.bsp_tagging():
-            rep = self.pipeline(tracer.layer)
+            rep = self.pipeline([untraced, tracer.layer], warm=True, single=True)
         self.report_pass("traced", rep)
         if self.crawl:  # extraction alone, so that extract and graph separate
             with tracer.layer("extract"):
@@ -231,7 +245,7 @@ class Bench:
                     "noop").mode("overwrite").save()
         print(f"tracing: {tracer.harvest_s:.1f} s spent reading the status store "
               "between phases", flush=True)
-        return plain, rep, tracer
+        return rep, tracer
 
     def jvm_peak_rss_mb(self) -> float:
         pid = self.spark.sparkContext._gateway.proc.pid
@@ -244,7 +258,7 @@ class Bench:
     def check(self, reps: list) -> list[dict]:
         self.spark.sparkContext.setJobGroup("checks", "checks")
         gc.collect()
-        oracle = (self.W.CrawlOracle(self.spark, self.size, self.args.seed) if self.crawl
+        oracle = (self.W.CrawlOracle(self.spark, self.size) if self.crawl
                   else self.W.WebOracle(self.input))
         return [oracle.check(rep, self.size) for rep in reps]
 
@@ -263,12 +277,13 @@ class Bench:
             values[phase] = med(r.phases[phase] for r in reps)
         return self._emit(self.spec["end_to_end"], values)
 
-    def per_layer(self, setup: dict, plain, rep, tracer) -> dict:
+    def per_layer(self, setup: dict, rep, tracer) -> dict:
         """Every value is measured on both workloads, or is a count or ratio
         that reads 0 where a workload does not call the layer: a time that
-        reads 0 on every run would look like no measurement at all."""
+        reads 0 on every run would look like no measurement at all. ``rep``
+        holds an untraced, then a traced call per phase."""
         values = {k: v for k, v in setup.items() if k.startswith("session.")}
-        values["trace.overhead_s"] = rep.pipeline_s - plain.pipeline_s
+        values["trace.overhead_s"] = rep.call_pipeline_s(-1) - rep.call_pipeline_s(0)
         last = "algorithms.triangles" if self.crawl else "algorithms.cdlp"
         for name, layer in (("graph", "graph"), ("algorithms.pagerank", "algorithms.pagerank"),
                             ("algorithms.wcc", "algorithms.wcc"),
@@ -285,7 +300,8 @@ class Bench:
             "extract.cpu_util": run_s / (self.ncpu * ex["wall_s"]) if self.crawl else 0.0,
         })
         for kernel in ("pagerank", "wcc", "cdlp"):
-            walls = sorted(m["wall_s"] for r in rep.bsp.get(kernel, []) for m in r.metrics)
+            traced = rep.bsp[kernel][-1] if kernel in rep.bsp else []
+            walls = sorted(m["wall_s"] for r in traced for m in r.metrics)
             call = tracer.call(f"algorithms.{kernel}")
             values.update({
                 f"bsp.{kernel}.supersteps": len(walls),
@@ -298,7 +314,7 @@ class Bench:
         ratio = 0.0
         if self.crawl:
             split = {True: [], False: []}
-            for r in rep.bsp["pagerank"]:
+            for r in rep.bsp["pagerank"][-1]:
                 for m in r.metrics:
                     split[m["superstep"] % self.size.ckpt_every == 0].append(m["wall_s"])
             ratio = statistics.median(split[True]) / statistics.median(split[False])
