@@ -4207,7 +4207,21 @@ def _q_pyg_blocks(spark, sf_dir):
 
     g = _graph(spark, sf_dir)
     blocks = neighbor_sample(g, _roots(g), fanouts=[3, 2], seed=42)
-    return export_pyg_blocks(blocks)
+    return _pyg_blocks_flat(export_pyg_blocks(blocks))
+
+
+_PYG_ARRAYS = ("n_id", "edge_index_src", "edge_index_dst", "hop")
+
+
+def _pyg_blocks_flat(blocks: DataFrame) -> DataFrame:
+    """The PyG payload with each array column rendered as a comma-joined
+    string (empty array -> ''): a gate row must be sortable and hashable,
+    and a list cell is neither. The oracle renders its lists identically."""
+    return blocks.select(
+        "root",
+        *(F.array_join(F.col(c).cast("array<string>"), ",").alias(c)
+          for c in _PYG_ARRAYS),
+    )
 
 
 def _pyg_blocks_sql(fanouts: list[int], roots_pred: str, seed: int) -> str:
@@ -4240,10 +4254,10 @@ eagg AS (
          LIST(hop ORDER BY hop, si, di) AS hop
   FROM es GROUP BY root),
 nagg AS (SELECT root, LIST(vid ORDER BY i) AS n_id FROM loc GROUP BY root)
-SELECT n.root, n.n_id,
-       COALESCE(e.edge_index_src, CAST([] AS BIGINT[])) AS edge_index_src,
-       COALESCE(e.edge_index_dst, CAST([] AS BIGINT[])) AS edge_index_dst,
-       COALESCE(e.hop, CAST([] AS BIGINT[])) AS hop
+SELECT n.root, array_to_string(n.n_id, ',') AS n_id,
+       COALESCE(array_to_string(e.edge_index_src, ','), '') AS edge_index_src,
+       COALESCE(array_to_string(e.edge_index_dst, ','), '') AS edge_index_dst,
+       COALESCE(array_to_string(e.hop, ','), '') AS hop
 FROM nagg n LEFT JOIN eagg e ON e.root = n.root
 """
     )

@@ -28,12 +28,15 @@ from graphscope_spark.graph import LinkGraph  # noqa: E402
 
 def synthetic_edges(spark, n_vertices: int, n_edges: int, num_partitions: int):
     """Deterministic power-law-ish edge table, generated JVM-side. ~1% of
-    edges hit one of 16 hub vertices (the skew path)."""
+    edges hit one of 16 hub vertices (the skew path). Endpoints come from a
+    64-bit hash of the edge index, so nearly every pair is distinct
+    (expected duplicates ~ (E/V)^2 / 2); a linear congruence in the index
+    would repeat every ``n_vertices`` edges."""
     i = F.col("id")
-    src = F.pmod(i * 2654435761, F.lit(n_vertices))
+    src = F.pmod(F.xxhash64(i, F.lit(1)), F.lit(n_vertices))
     dst = F.when(
         F.pmod(i, F.lit(100)) < 1, F.pmod(i, F.lit(16))  # hub skew
-    ).otherwise(F.pmod(i * i + 7 * i + 13, F.lit(n_vertices)))
+    ).otherwise(F.pmod(F.xxhash64(i, F.lit(2)), F.lit(n_vertices)))
     return (
         spark.range(0, n_edges, 1, num_partitions)
         .select(src.alias("src"), dst.alias("dst"))

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphscope_spark.bsp import truncate_plan_lazy
+from graphscope_spark.bsp import release_state, truncate_plan, truncate_plan_lazy
 from graphscope_spark.graph import LinkGraph
 
 
@@ -67,7 +67,8 @@ def _local_moves(
     verts: DataFrame, sym: DataFrame, m2: float, max_rounds: int
 ) -> DataFrame:
     """One level of synchronous local moves over a weighted symmetric edge
-    table ``sym(src, dst, w)`` (self-loops allowed). Returns (vid, comm).
+    table ``sym(src, dst, w)`` (self-loops allowed). Returns the last
+    round's checkpointed state (vid, comm, ...), for the caller to release.
 
     Oscillation damping, two deterministic mechanisms:
 
@@ -160,11 +161,12 @@ def _local_moves(
             .transform(truncate_plan_lazy)
         )
         n_moved = nxt.where("moved").count()
-        comm = nxt.select("vid", "comm", "deg", "prev")
+        release_state(comm)
+        comm = nxt
         if n_moved == 0 and prev_moved == 0:  # both half-schedules settled
             break
         prev_moved = n_moved
-    return comm.select("vid", "comm")
+    return comm
 
 
 def louvain(
@@ -175,6 +177,8 @@ def louvain(
     Each level runs local moves to their fixpoint, contracts communities
     into a weighted super-graph, and recurses until no contraction happens
     (or ``max_levels``). ``max_levels=1`` reproduces the one-level variant.
+    The result is checkpoint-backed: free it with ``bsp.release_state``
+    once consumed. Every intermediate cut is freed before returning.
     """
     sym = (
         graph.undirected_edges(drop_self_loops=True)
@@ -191,17 +195,25 @@ def louvain(
     cur_sym = sym
     # assignment: finest vid → current-level community id
     assign = graph.vertices.select("vid", F.col("vid").alias("comm"))
+    spent: list[DataFrame] = []  # cuts the current level's inputs came from
     for _level in range(max_levels):
         n_before = cur_verts.count()
         comm = _local_moves(cur_verts, cur_sym, m2, max_rounds)
         n_comm = comm.select("comm").distinct().count()
-        # compose: finest vid → new community of its current super-vertex
+        # this level's lazy inputs are materialized by now
+        for f in spent:
+            release_state(f)
+        spent = [comm, cur_verts, cur_sym]
+        # compose: finest vid → new community of its current super-vertex;
+        # eager, so the previous assignment is spent right away
         lut = comm.select(F.col("vid").alias("comm"), F.col("comm").alias("_new"))
-        assign = (
+        nxt = (
             assign.join(lut, "comm")
             .select("vid", F.col("_new").alias("comm"))
-            .transform(truncate_plan_lazy)
+            .transform(truncate_plan)
         )
+        release_state(assign)
+        assign = nxt
         if n_comm >= n_before:
             break
         # coarsen into the weighted super-graph
@@ -213,10 +225,10 @@ def louvain(
             .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
             .agg(F.sum("w").alias("w"))
         )
-        new_sym = ce.transform(truncate_plan_lazy)
-        if cur_sym is not sym:
-            cur_sym.unpersist()
-        cur_sym = new_sym
+        cur_sym = ce.transform(truncate_plan_lazy)
         cur_verts = comm.select(F.col("comm").alias("vid")).distinct().transform(truncate_plan_lazy)
-    sym.unpersist()
-    return assign.select("vid", "comm")
+    # the last level's cuts (the base edge table included), and the next
+    # level's if max_levels cut it off
+    for f in spent + [cur_sym, cur_verts]:
+        release_state(f)
+    return assign

@@ -18,16 +18,18 @@ Spark shape (one shuffle-agg + one join per superstep):
   message-combine GRAPE does in its message manager);
 * dangling mass is a scalar: folded into the *previous* round's convergence
   aggregate so each superstep costs exactly one extra one-row collect;
-* per-round lineage truncation + durable checkpoint/resume via bsp.run_bsp.
-* ``fused_rounds=k`` stacks k supersteps into ONE Spark job (the dangling
-  scalar moves in-plan as a broadcast 1-row aggregate, so no driver
-  round-trip is needed between fused rounds). Arithmetic is identical per
-  round; only the barrier count changes — k× fewer driver round-trips and
-  scheduler waits, the dominant cost at high executor counts. Convergence
-  (reference semantics: last round's Σ|Δ| < N·tol) is then only CHECKED at
-  block boundaries, so a tol>0 run may execute up to k-1 extra rounds past
-  the reference's stopping round — use fused_rounds>1 with tol=0 /
-  fixed-round workloads, or accept the documented overshoot.
+* lineage truncation, checkpoint/resume and fusion via bsp.run_bsp. One
+  superstep is one power-iteration round. With ``fused_rounds=k>1``,
+  run_bsp stacks k of them into ONE Spark job, and the dangling scalar
+  moves in-plan as a broadcast 1-row aggregate, so no driver round-trip is
+  needed between fused rounds. Arithmetic is identical per round; only the
+  barrier count changes — k× fewer driver round-trips and scheduler waits,
+  the dominant cost at high executor counts. Convergence (reference
+  semantics: last round's Σ|Δ| < N·tol) is then only CHECKED at block
+  ends, so a tol>0 run may execute up to k-1 extra rounds past the
+  reference's stopping round. ``max_rounds`` is exact for every k, and
+  supersteps and checkpoints count true rounds, so a run may resume under
+  a different k.
 """
 
 from __future__ import annotations
@@ -54,8 +56,9 @@ def pagerank(
     """Returns BSPResult whose state is (vid, rank).
 
     ``fused_rounds=k`` runs k power-iteration rounds per Spark job (see
-    module docstring); ``max_rounds`` is still counted in supersteps and is
-    rounded UP to a multiple of k.
+    module docstring); ``max_rounds`` counts rounds and is honoured exactly.
+    A checkpoint written by an older release that counted fused BLOCKS
+    (its manifest carries ``fused_rounds`` > 1) is refused on resume.
 
     ``weight_col``: name of a POSITIVE edge-weight column on ``graph.edges``
     — rank then distributes proportionally to weight (NetworkX
@@ -119,24 +122,17 @@ def pagerank(
     # dangling mass for the upcoming round; updated by scalar_fn each round
     # (one collect returns both Σ|Δ| and Σ_dangling r — the Spark analog of
     # the reference's two Sum() allreduces at pagerank_networkx.h:85,146,159).
-    k = max(1, int(fused_rounds))
-
     holder = {"dmass": None}
     if resume and checkpoint_dir:
         loaded = load_checkpoint(spark, checkpoint_dir)
         if loaded is not None:
             st, _, man = loaded
-            # the manifest's 'superstep' counts BLOCKS of fused_rounds; a
-            # resume under a different k would silently misinterpret the
-            # round budget and the returned superstep count — refuse.
-            ck_k = int(man.get("fused_rounds", 1))
-            if ck_k != k:
+            if int(man.get("fused_rounds", 1)) > 1:
                 raise ValueError(
-                    f"pagerank resume: checkpoint at {checkpoint_dir} was "
-                    f"written with fused_rounds={ck_k} but this run asked "
-                    f"for fused_rounds={fused_rounds}; pass "
-                    f"fused_rounds={ck_k} (block counters are only "
-                    "comparable at the same fusion factor)"
+                    f"pagerank resume: the checkpoint at {checkpoint_dir} "
+                    "counts blocks of fused_rounds="
+                    f"{man['fused_rounds']}, not rounds; restart without "
+                    "resume"
                 )
             holder["dmass"] = (
                 st.agg(F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))).collect()[0][0]
@@ -176,12 +172,9 @@ def pagerank(
         )
 
     def superstep(state: DataFrame, rnd: int) -> DataFrame:
-        if k == 1:
-            return one_round(state, F.lit(alpha * holder["dmass"] / n))
-        s = state
-        for _ in range(k):
-            s = one_round(s, None)
-        return s
+        if fused_rounds > 1:
+            return one_round(state, None)
+        return one_round(state, F.lit(alpha * holder["dmass"] / n))
 
     def scalar_fn(state: DataFrame) -> float:
         row = state.agg(
@@ -194,21 +187,15 @@ def pagerank(
     res = run_bsp(
         state0,
         superstep,
-        max_rounds=-(-max_rounds // k),  # blocks of k supersteps, rounded up
+        max_rounds=max_rounds,
         scalar_fn=scalar_fn,
         converged_fn=lambda delta, rnd: delta < n * tol,
         checkpoint_dir=checkpoint_dir,
         checkpoint_every=checkpoint_every,
         resume=resume,
-        meta={"algorithm": "pagerank", "alpha": alpha, "tol": tol, "n": n,
-              "fused_rounds": k},
-        # a fused block references the state 3× per inner round (contrib,
-        # dangling agg, join base), so sizeInBytes stats grow ~3^k digits
-        # per block — reset them with the fresh-RDD rebuild EVERY block
-        # (see bsp.truncate_plan docstring / the stats-explosion note)
-        stats_reset_every=1 if k > 1 else 8,
+        meta={"algorithm": "pagerank", "alpha": alpha, "tol": tol, "n": n},
+        fused_rounds=fused_rounds,
     )
     ew.unpersist()
-    res.supersteps *= k
     res.state = res.state.select("vid", "rank")
     return res

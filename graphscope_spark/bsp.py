@@ -5,20 +5,27 @@ The reference runs ``PEval`` then rounds of ``IncEval`` until no messages
 message shuffles between rounds are MPI all-to-alls. Here a superstep is a
 lazy DataFrame transformation and the "message shuffle" is whatever exchange
 Catalyst plans for the round's joins/aggregations; the driver loop only
-evaluates one scalar action per round (the convergence aggregate) so it
-never serializes the cluster.
+evaluates one scalar action per block (the convergence aggregate) so it
+never serializes the cluster. ``run_bsp`` is the one superstep loop.
 
 Scale concerns handled centrally (north rule):
 
-* **Lineage truncation** — iterative plans grow unboundedly; every round the
-  new state is either ``localCheckpoint``-ed (fast, in-memory) or, every
-  ``checkpoint_every`` rounds, written to parquet with a JSON manifest
-  (superstep, partition count, input fingerprint) so a killed job resumes
-  mid-iteration (reference analog: SERIALIZE_GRAPH snapshots,
-  `framework/dag_utils.py:1115`).
-* **Per-superstep metrics** — wall time, rows changed, and (best-effort via
-  the Spark UI REST API) shuffle read/write bytes and task-time skew
-  (max/median task duration), the observability the north rule names.
+* **Fusion** — ``fused_rounds=k`` composes k supersteps into one block that
+  one Spark action materializes (k× fewer driver barriers); the plan is cut
+  every ``FUSE_CUT_EVERY`` inner rounds.
+* **Lineage truncation** — every block ends at a truncation point: a lazy
+  ``localCheckpoint`` (fast, in-memory), or, every ``checkpoint_every``
+  rounds, parquet with a JSON manifest (true superstep number, partition
+  count, schema, the caller's ``meta``) so a killed job resumes mid-iteration
+  (reference analog: SERIALIZE_GRAPH snapshots,
+  `framework/dag_utils.py:1115`). The stats-resetting rebuild
+  (``truncate_plan``) replaces the plain checkpoint every
+  ``STATS_RESET_EVERY`` rounds and at the end of every fused block.
+* **Per-superstep metrics** — wall time, rounds in the job and the
+  convergence value, plus the superstep's Spark job tag. Shuffle bytes and
+  task-time quantiles (the skew the north rule names) are resolved from
+  the tag by ``job_tag_metrics`` only when asked, exactly per superstep and
+  off the loop's critical path.
 """
 
 from __future__ import annotations
@@ -26,8 +33,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import time
 import urllib.request
+import uuid
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -158,49 +168,83 @@ def truncate_plan_lazy(df: DataFrame) -> DataFrame:
 # --- metrics ------------------------------------------------------------------
 
 
-class SparkStageMetrics:
-    """Best-effort shuffle/skew metrics from the local Spark UI REST API.
+_TAG_METRICS = ("jobs", "shuffle_read_bytes", "shuffle_write_bytes",
+                "task_time_p50_ms", "task_time_max_ms")
 
-    Uses only the public monitoring REST surface (/api/v1); degrades to
-    zeros when the UI is disabled (e.g. spark.ui.enabled=false in tests).
-    """
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        try:
-            self.base = spark.sparkContext.uiWebUrl
-            self.app_id = spark.sparkContext.applicationId
-        except Exception:
-            self.base = None
-        self._seen: set[int] = set()
+def job_tag_metrics(spark: SparkSession, tags: list[str]) -> dict[str, dict]:
+    """Map Spark job tags (e.g. each superstep's ``job_tag`` in
+    ``BSPResult.metrics``) to ``{jobs, shuffle_read_bytes,
+    shuffle_write_bytes, task_time_p50_ms, task_time_max_ms}`` of the jobs
+    that carry them.
 
-    def snapshot(self) -> dict:
-        out = {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0,
-               "task_time_max_ms": 0, "task_time_median_ms": 0}
-        if not self.base:
-            return out
-        try:
-            url = f"{self.base}/api/v1/applications/{self.app_id}/stages?status=complete"
-            with urllib.request.urlopen(url, timeout=2) as r:
-                stages = json.loads(r.read())
-        except Exception:
-            return out
-        durations = []
-        for st in stages:
-            key = (st["stageId"], st["attemptId"])
-            if key in self._seen:
-                continue
-            self._seen.add(key)
-            out["shuffle_read_bytes"] += st.get("shuffleReadBytes", 0)
-            out["shuffle_write_bytes"] += st.get("shuffleWriteBytes", 0)
-            if st.get("numCompleteTasks"):
-                avg = st.get("executorRunTime", 0) / max(1, st["numCompleteTasks"])
-                durations.append(avg)
-        if durations:
-            durations.sort()
-            out["task_time_max_ms"] = round(durations[-1], 1)
-            out["task_time_median_ms"] = round(durations[len(durations) // 2], 1)
+    Reads the monitoring REST API once — ``/jobs`` (their ``jobTags``) and
+    ``/stages?details=true`` — after a marker job has reached the status
+    store, so every event of the tagged jobs has been applied. A stage is
+    credited to the first job that lists it (a later job lists a reused
+    stage as skipped), so no stage counts twice. Task-time quantiles are
+    over the successful TASKS' executor run time, i.e. they show skew.
+
+    Metrics that cannot be read are ``None``, never 0: every tag when the
+    UI is disabled or the API fails, and a tag whose jobs are not (or no
+    longer, see ``spark.ui.retainedJobs``) in the status store."""
+    out = {t: dict.fromkeys(_TAG_METRICS) for t in tags}
+    sc = spark.sparkContext
+    if not sc.uiWebUrl or not tags:
         return out
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    try:
+        if not _drain(sc, base):
+            return out
+        jobs = _rest(base, "/jobs")
+        stages = _rest(base, "/stages?details=true")
+    except (OSError, ValueError):  # UI unreachable or not answering JSON
+        return out
+    owner: dict[int, int] = {}  # stage id -> first job that lists it
+    for j in jobs:
+        for s in j["stageIds"]:
+            owner[s] = min(owner.get(s, j["jobId"]), j["jobId"])
+    tag_of = {j["jobId"]: t for j in jobs for t in j.get("jobTags", []) if t in out}
+    for t, n in Counter(tag_of.values()).items():
+        out[t].update(jobs=n, shuffle_read_bytes=0, shuffle_write_bytes=0)
+    task_ms: dict[str, list[int]] = {t: [] for t in tags}
+    for st in stages:
+        t = tag_of.get(owner.get(st["stageId"]))
+        if t is None or st["status"] not in ("COMPLETE", "FAILED"):
+            continue
+        out[t]["shuffle_read_bytes"] += st["shuffleReadBytes"]
+        out[t]["shuffle_write_bytes"] += st["shuffleWriteBytes"]
+        task_ms[t] += [task["taskMetrics"]["executorRunTime"]
+                       for task in st.get("tasks", {}).values()
+                       if task["status"] == "SUCCESS" and "taskMetrics" in task]
+    for t, ms in task_ms.items():
+        if ms:
+            out[t]["task_time_p50_ms"] = statistics.median(ms)
+            out[t]["task_time_max_ms"] = max(ms)
+    return out
+
+
+def _rest(base: str, path: str):
+    with urllib.request.urlopen(base + path, timeout=60) as r:
+        return json.loads(r.read())
+
+
+def _drain(sc, base: str) -> bool:
+    """Run a marker job and wait until the status store lists it as done:
+    the listener applies events in order, so every job before it is
+    complete in the store."""
+    marker = f"graphscope_spark-marker-{uuid.uuid4().hex}"
+    sc.addJobTag(marker)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.removeJobTag(marker)
+    deadline = time.time() + 30
+    while time.time() < deadline:
+        if any(marker in j.get("jobTags", []) for j in _rest(base, "/jobs?status=succeeded")):
+            return True
+        time.sleep(0.05)
+    return False
 
 
 # --- checkpoint manifest --------------------------------------------------------
@@ -266,14 +310,22 @@ class BSPResult:
         """Free the result state's cache/checkpoint blocks. Call when the
         state has been consumed (written out / collected) — afterwards the
         DataFrame is only recomputable from durable storage."""
-        try:
-            self.state.unpersist()
-        except Exception:  # pragma: no cover - best-effort release
-            pass
-        if self.ck_ids:
-            self.state._graft_ck_ids = self.ck_ids
-            release_truncated(self.state)
-            self.ck_ids = []
+        self.state._graft_ck_ids = self.ck_ids
+        release_state(self.state)
+        self.ck_ids = []
+
+
+# Inner rounds of a fused block between plan cuts. A superstep references
+# the previous state twice (frontier + join base), so uncut inner rounds
+# re-execute up to 2^(FUSE_CUT_EVERY-1) = 8x: cheap frontier-sized joins,
+# next to the k-fold barrier saving on the sparse rounds fusion targets.
+FUSE_CUT_EVERY = 4
+# Rounds between stats-resetting rebuilds: a per-round rebuild costs a
+# full-state exchange and real stats (measured 7.3 → 20.5 s/superstep at
+# 100M edges), while every-8 caps sizeInBytes at ~19·2⁸ digits. A fused
+# block compounds that growth over all its rounds (PageRank: ~3^k digits),
+# so it is rebuilt at every block end.
+STATS_RESET_EVERY = 8
 
 
 def run_bsp(
@@ -286,49 +338,45 @@ def run_bsp(
     checkpoint_every: int = 5,
     resume: bool = False,
     meta: dict | None = None,
-    truncate_every: int = 1,
-    stats_reset_every: int = 8,
-    fused_rounds: int | Callable[[int], int] = 1,
-    fuse_cut_every: int = 4,
+    fused_rounds: int = 1,
 ) -> BSPResult:
-    """Run supersteps until convergence.
-
-    ``fused_rounds`` may be a callable ``next_round -> k`` (a fusion
-    SCHEDULE): deep-but-cheap monotone relaxations (topological levels,
-    late peel rounds) grow k geometrically so the number of driver
-    barriers is O(log depth) instead of O(depth) — the barrier, not the
-    work, dominates them.
-
-    ``fused_rounds=k`` stacks k supersteps into ONE Spark job: the inner
-    applications only compose lazy plans; the block's convergence aggregate
-    is the single action that materializes them all. Only valid for
-    MONOTONE supersteps where an all-quiet round stays quiet forever (BFS /
-    SSSP relaxation / min-label propagation) — there, overshooting the
-    fixpoint by up to k-1 rounds is semantically free (empty frontiers
-    produce no messages), so the block-end convergence check is exact.
-    NOT valid for fixed-round semantics (CDLP's exactly-10-rounds contract)
-    where the round budget must be hit precisely — ``max_rounds`` is still
-    respected (the last block is truncated to fit). With k>1 the reported
-    ``BSPResult.supersteps`` (and the metrics' 'superstep' field) is the
-    BLOCK-END round — up to k-1 past the true convergence round; results
-    and resume are unaffected, but round counts are not comparable across
-    different ``fused_rounds`` settings. Checkpoint manifests
-    store TRUE superstep numbers, so a run resumed with a different
-    ``fused_rounds`` keeps a correct round budget (unlike a block-counting
-    scheme, no cross-validation is needed).
+    """Run supersteps until convergence or ``max_rounds``.
 
     ``superstep_fn(state, round)`` returns the *lazy* next state, which may
-    carry helper columns (e.g. the previous value). Each round the loop
-    materializes it once (localCheckpoint, or durable parquet every
-    ``checkpoint_every`` rounds), then ``scalar_fn(materialized)`` computes
-    the convergence measure — a cheap aggregate over truncated lineage, the
-    Spark analog of GRAPE's ``Sum()`` allreduce
-    (`pagerank_networkx.h:85,146`). ``converged_fn(scalar, round)`` decides
-    termination — reference analogs: PageRank's ``Σ|Δ| < tol·N``
+    carry helper columns (e.g. the previous value). ``scalar_fn`` computes
+    the convergence measure on the materialized state — a cheap aggregate
+    over truncated lineage, the Spark analog of GRAPE's ``Sum()``
+    allreduce (`pagerank_networkx.h:85,146`) — and is the block's one
+    action. ``converged_fn(scalar, round)`` decides termination —
+    reference analogs: PageRank's ``Σ|Δ| < tol·N``
     (`pagerank_networkx.h:135-148`), WCC's "no vertex changed"
     (`wcc_projected.h:175-180`).
+
+    ``fused_rounds=k`` stacks k supersteps into ONE block: the inner
+    applications only compose lazy plans (cut every ``FUSE_CUT_EVERY``
+    rounds), and the block's convergence aggregate is the single action
+    that materializes them all. Convergence is only CHECKED at block ends,
+    so a block may overshoot the converging round by up to k-1 rounds:
+    free for MONOTONE supersteps where an all-quiet round stays quiet
+    (BFS / SSSP relaxation / min-label propagation); for others (PageRank
+    with tol>0) the overshoot runs extra rounds. ``max_rounds`` is exact
+    (the last block is shortened to fit). The reported
+    ``BSPResult.supersteps`` and each metric's ``superstep`` are TRUE round
+    numbers (the block-end round), and so are the checkpoint manifests: a
+    run resumed with a different ``fused_rounds`` keeps a correct round
+    budget.
+
+    Truncation rule: every block ends at a truncation point — durable
+    parquet every ``checkpoint_every`` rounds, else the stats-resetting
+    rebuild every ``STATS_RESET_EVERY`` rounds and after every block of
+    more than one round, else a lazy ``localCheckpoint`` (keeps the round
+    output's partitioning, so the next state⋈edges join reuses it). Each
+    block's Spark jobs carry a job tag unique to this call and superstep,
+    recorded as the metric's ``job_tag``: ``job_tag_metrics`` resolves it
+    to shuffle bytes and task-time quantiles.
     """
     spark = state.sparkSession
+    sc = spark.sparkContext
     start_round = 0
     if resume and checkpoint_dir:
         loaded = load_checkpoint(spark, checkpoint_dir)
@@ -336,115 +384,57 @@ def run_bsp(
             state, start_round, man = loaded
             if man.get("final"):  # already converged — nothing to redo
                 return BSPResult(state=state, supersteps=start_round, converged=True)
-    mon = SparkStageMetrics(spark)
-    mon.snapshot()  # drain stages from setup
+    call_tag = f"graphscope_spark-bsp-{uuid.uuid4().hex[:12]}"
+    k = max(1, int(fused_rounds))
     metrics: list[dict] = []
     converged = False
-    rnd = start_round
-    # States persisted (not truncated) whose lineage is still referenced by
-    # the current state; they may only be unpersisted once a truncation
-    # point (localCheckpoint / durable checkpoint) severs that lineage.
-    pending_unpersist: list[DataFrame] = []
-    fuse_of = fused_rounds if callable(fused_rounds) else (lambda _r: fused_rounds)
-    # Fire-schedule anchors (true round numbers); with k=1 these reproduce
-    # the classic every-N modular cadence, with k>1 they keep firing every
-    # ~N rounds even though rnd advances in strides that never hit N exactly.
-    last_durable = last_trunc = last_reset = start_round
+    rnd = last_durable = last_reset = start_round
     while rnd < max_rounds:
         t0 = time.time()
-        k = max(1, int(fuse_of(rnd)))
         block = min(k, max_rounds - rnd)
-        new_state = state
-        # Inner rounds compose LAZY plans; every `fuse_cut_every` steps the
-        # plan is cut (truncate_plan_lazy: a deferred localCheckpoint whose
-        # Catalyst node carries leaf stats) so in-block self-join stats
-        # can't multiply and optimizer time stays linear in k. The cuts
-        # materialize together with the block's single convergence action.
-        # In-block trade-off: each superstep references the previous state
-        # twice (frontier + join base), so between cuts the composed plan
-        # re-executes uncut inner rounds up to 2^(fuse_cut_every-1) times.
-        # fuse_cut_every=4 caps that at 8x of the (cheap, frontier-sized)
-        # inner joins; the k-fold barrier saving dominates on sparse late
-        # rounds, which is where fusion is enabled (measured in BENCH).
-        inner_cuts: list[DataFrame] = []
-        for j in range(1, block + 1):
-            new_state = superstep_fn(new_state, rnd + j)
-            if j < block and fuse_cut_every and j % fuse_cut_every == 0:
-                new_state = truncate_plan_lazy(new_state)
-                inner_cuts.append(new_state)
-        rnd += block
-        # One Spark action per BLOCK: the convergence aggregate below both
-        # materializes the persisted state and returns the scalar. Lineage
-        # is truncated every `truncate_every` rounds (localCheckpoint) and
-        # durably every `checkpoint_every` rounds (parquet + manifest) —
-        # iterative plans otherwise grow without bound.
-        # Lineage truncation is a plain localCheckpoint (keeps the round
-        # output's partitioning, so next round's state⋈edges join reuses
-        # it); the stats-resetting RDD rebuild (truncate_plan) runs only
-        # every `stats_reset_every` rounds — a per-round rebuild costs an
-        # extra full-state exchange each round AND replaces real stats with
-        # defaultSizeInBytes (measured 7.3 → 20.5 s/superstep at 100M
-        # edges), while every-8 caps sizeInBytes digit growth at ~19·2⁸ —
-        # microseconds of BigInteger math.
-        truncated = True
-        if checkpoint_dir and rnd - last_durable >= checkpoint_every:
-            last_durable = last_trunc = rnd
-            new_state = save_checkpoint(new_state, checkpoint_dir, rnd, meta)
-        elif rnd - last_trunc >= truncate_every:
-            last_trunc = rnd
-            if stats_reset_every and rnd - last_reset >= truncate_every * stats_reset_every:
+        tag = f"{call_tag}-{rnd + block}"
+        sc.addJobTag(tag)
+        try:
+            new_state = state
+            inner_cuts: list[DataFrame] = []
+            for j in range(1, block + 1):
+                new_state = superstep_fn(new_state, rnd + j)
+                if j < block and j % FUSE_CUT_EVERY == 0:
+                    # deferred checkpoint with leaf stats: in-block
+                    # self-join stats can't multiply; it materializes with
+                    # the block's single convergence action
+                    new_state = truncate_plan_lazy(new_state)
+                    inner_cuts.append(new_state)
+            rnd += block
+            # Lazy truncation: the convergence aggregate below is the action
+            # that materializes it — ONE job per block (eager=True would add
+            # a materialization job: 2 scheduler barriers per block).
+            if checkpoint_dir and rnd - last_durable >= checkpoint_every:
+                last_durable = rnd
+                new_state = save_checkpoint(new_state, checkpoint_dir, rnd, meta)
+            elif block > 1 or rnd - last_reset >= STATS_RESET_EVERY:
                 last_reset = rnd
-                # lazy for the same one-job-per-round reason; the rebuild
-                # node's stats reset happens at plan construction either way
                 new_state = truncate_plan(new_state, eager=False)
             else:
-                # lazy: the convergence aggregate below is the action that
-                # materializes this checkpoint — keeps the loop at ONE job
-                # per round (eager=True ran a separate materialization job
-                # before the scalar job: 2 scheduler barriers per round)
                 new_state = local_checkpoint(new_state, eager=False)
-        else:
-            new_state = new_state.persist()
-            truncated = False
-        # Materialize the new state (the convergence aggregate is the one
-        # action) BEFORE unpersisting the old — evicting first would force
-        # recomputation of the whole since-last-truncation lineage.
-        scalar = scalar_fn(new_state)
-        if truncated:
-            # new_state's lineage is severed: everything older is releasable,
-            # including the in-block plan cuts (cached by the action above).
-            # release_state, not unpersist: most of these frames are
-            # checkpoint-backed, and unpersist alone leaves their blocks
-            # registered forever (one full state copy per round).
-            for st in pending_unpersist:
-                release_state(st)
-            pending_unpersist.clear()
-            release_state(state)
-            for st in inner_cuts:
-                release_state(st)
-        else:
-            # new_state (merely persisted) still references `state`'s
-            # lineage — deferring the unpersist keeps a cache eviction of
-            # new_state recomputable (the previous state is typically a
-            # localCheckpoint whose blocks are freed on unpersist).
-            pending_unpersist.append(state)
-            pending_unpersist.extend(inner_cuts)
+            scalar = scalar_fn(new_state)
+        finally:
+            sc.removeJobTag(tag)
+        # Materialized BEFORE releasing the old state (evicting first would
+        # recompute); new_state's lineage is severed, so the old state and
+        # the in-block cuts are releasable. release_state, not unpersist:
+        # on checkpoint-backed frames unpersist alone leaves their blocks
+        # registered forever (one full state copy per round).
+        release_state(state)
+        for st in inner_cuts:
+            release_state(st)
         state = new_state
-        m = {"superstep": rnd, "rounds_in_job": block,
-             "wall_s": round(time.time() - t0, 4),
-             "convergence": scalar, **mon.snapshot()}
-        metrics.append(m)
+        metrics.append({"superstep": rnd, "rounds_in_job": block,
+                        "wall_s": round(time.time() - t0, 4),
+                        "convergence": scalar, "job_tag": tag})
         if converged_fn(scalar, rnd):
             converged = True
             break
-    # If the loop exited between truncation points, earlier states are still
-    # referenced by the final state's lineage — sever it once, then release
-    # them (otherwise they leak in the session CacheManager).
-    if pending_unpersist:
-        state = local_checkpoint(state, eager=True)
-        for st in pending_unpersist:
-            release_state(st)
-        pending_unpersist.clear()
     # Mark final only on true convergence: a max_rounds-bounded run must stay
     # resumable with a larger budget (e.g. PageRank stopped early by budget).
     if checkpoint_dir and converged:

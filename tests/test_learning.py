@@ -310,3 +310,21 @@ def test_node2vec_duplicate_edges_ignored(spark):
         w = node2vec_walks(g, roots, length=4, num_walks=3, p=0.5, q=2.0)
         outs.append(sorted(tuple(r) for r in w.collect()))
     assert outs[0] == outs[1]
+
+
+def test_pyg_blocks_gate_rows_sort(tiny_graph):
+    """The gate's pyg_blocks rows must survive the driver's canonical
+    ``sort_values`` over every column: list cells are unhashable, so the
+    query renders each array as a comma-joined string."""
+    import __spark_entry__ as entry
+    from graphscope_spark.learning import export_pyg_blocks, neighbor_sample
+
+    blocks = neighbor_sample(tiny_graph, tiny_graph.vertices, fanouts=[3, 2], seed=42)
+    flat = entry._pyg_blocks_flat(export_pyg_blocks(blocks))
+    pdf = flat.toPandas().sort_values(list(flat.columns))
+    assert len(pdf) > 1
+    for _, row in pdf.iterrows():
+        assert row["n_id"].split(",")[0] == str(row["root"])  # local 0 = root
+        assert (len(row["edge_index_src"].split(","))
+                == len(row["edge_index_dst"].split(","))
+                == len(row["hop"].split(",")))

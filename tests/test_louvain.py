@@ -43,3 +43,19 @@ def test_louvain_improves_modularity(tiny_graph):
     q_init = modularity(tiny_graph, singletons)
     assert q_final > q_init
     assert q_final > 0
+
+
+def test_louvain_releases_intermediate_cuts(spark, tiny_graph):
+    """Only the returned frame's own checkpoint blocks outlive the call;
+    every per-round and per-level cut is released."""
+    from graphscope_spark.bsp import release_state
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent_ids()
+    comm = louvain(tiny_graph)
+    comm.collect()
+    assert persistent_ids() - before <= set(getattr(comm, "_graft_ck_ids", []))
+    release_state(comm)
+    assert persistent_ids() - before == set()

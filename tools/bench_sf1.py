@@ -1,7 +1,9 @@
 """One-step scale evidence for the 100-TB claims (round-5 plan item 7):
 run the heavy datapipe/graph ops at sf0.1-equivalent size AND at 10×
 ("sf1" — ~50M synthetic edges / 10× docs) on the same box, recording wall
-time and per-op shuffle bytes (Spark UI REST via bsp.SparkStageMetrics).
+time and per-op shuffle bytes. Each measured op runs under its own Spark
+job tag, resolved afterwards by ``bsp.job_tag_metrics`` (Spark UI REST),
+so shuffle bytes are exactly the op's own (null when the UI is off).
 The success criterion is the SCALING RATIO: shuffle bytes must grow
 ~linearly with input (ratio ≈ 10 for a 10× input, never super-linear
 blowup), which turns the analytical 100-TB arguments in the op docstrings
@@ -22,6 +24,7 @@ import json
 import os
 import sys
 import time
+import uuid
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -30,7 +33,7 @@ sys.path.insert(0, str(REPO))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import synthetic_graph  # noqa: E402
-from graphscope_spark.bsp import SparkStageMetrics  # noqa: E402
+from graphscope_spark.bsp import job_tag_metrics  # noqa: E402
 from graphscope_spark.session import get_spark  # noqa: E402
 
 
@@ -91,37 +94,26 @@ def synthetic_embeddings(spark, n: int, dim: int, partitions: int):
     )
 
 
-def _drain(mon) -> dict:
-    """Accumulate snapshots until the UI REST endpoint reports no new
-    completed stages twice in a row — stage completion lands in the REST
-    view asynchronously, and a single post-action snapshot mis-attributes
-    the tail stages to the NEXT op's window."""
-    tot = {"shuffle_read_bytes": 0, "shuffle_write_bytes": 0}
-    quiet = 0
-    while quiet < 2:
-        time.sleep(1.0)
-        m = mon.snapshot()
-        if m["shuffle_read_bytes"] or m["shuffle_write_bytes"]:
-            tot["shuffle_read_bytes"] += m["shuffle_read_bytes"]
-            tot["shuffle_write_bytes"] += m["shuffle_write_bytes"]
-            quiet = 0
-        else:
-            quiet += 1
-    return tot
+def _mb(n):
+    return None if n is None else round(n / 1e6, 3)
 
 
 def run_op(spark, name, fn):
-    mon = SparkStageMetrics(spark)
-    _drain(mon)  # flush anything left over from the previous op
-    t0 = time.time()
-    result_rows = fn()
-    wall = time.time() - t0
-    m = _drain(mon)
+    sc = spark.sparkContext
+    tag = f"bench_sf1-{name}-{uuid.uuid4().hex[:8]}"
+    sc.addJobTag(tag)
+    try:
+        t0 = time.time()
+        result_rows = fn()
+        wall = time.time() - t0
+    finally:
+        sc.removeJobTag(tag)
+    m = job_tag_metrics(spark, [tag])[tag]
     return {
         "rows": result_rows,
         "wall_s": round(wall, 2),
-        "shuffle_read_mb": round(m["shuffle_read_bytes"] / 1e6, 3),
-        "shuffle_write_mb": round(m["shuffle_write_bytes"] / 1e6, 3),
+        "shuffle_read_mb": _mb(m["shuffle_read_bytes"]),
+        "shuffle_write_mb": _mb(m["shuffle_write_bytes"]),
     }
 
 
@@ -169,7 +161,9 @@ def main():
             # them is noise, not evidence; report null instead
             "shuffle_write": (
                 round(r10["shuffle_write_mb"] / r1["shuffle_write_mb"], 2)
-                if r1["shuffle_write_mb"] >= 1.0
+                if r1["shuffle_write_mb"] is not None
+                and r10["shuffle_write_mb"] is not None
+                and r1["shuffle_write_mb"] >= 1.0
                 else None
             ),
         }

@@ -45,7 +45,8 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--metrics-out", default=None,
                     help="write per-superstep metrics (wall s, convergence "
-                         "scalar, shuffle bytes, task-skew) as JSON lines")
+                         "scalar, jobs, shuffle bytes, task-time p50/max; "
+                         "null where the Spark UI is off) as JSON lines")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -70,6 +71,7 @@ def main() -> None:
 
     t0 = time.time()
     meta: dict = {"algorithm": args.algorithm, "partitions": P}
+    res = None
     if args.algorithm == "pagerank":
         from graphscope_spark.algorithms import pagerank
 
@@ -97,10 +99,13 @@ def main() -> None:
     out.write.mode("overwrite").parquet(args.output)
     meta["rows"] = spark.read.parquet(args.output).count()
     meta["wall_s"] = round(time.time() - t0, 3)
-    if args.metrics_out and "res" in dir():
+    if args.metrics_out and res is not None:
+        from graphscope_spark.bsp import job_tag_metrics
+
+        by_tag = job_tag_metrics(spark, [m["job_tag"] for m in res.metrics])
         with open(args.metrics_out, "w") as f:
             for m in res.metrics:
-                f.write(json.dumps(m) + "\n")
+                f.write(json.dumps({**m, **by_tag[m["job_tag"]]}) + "\n")
         meta["metrics_out"] = args.metrics_out
     print(json.dumps(meta))
     spark.stop()
