@@ -26,10 +26,38 @@ C4 = ½·Σ_{u<v} C(codeg(u,v), 2) for rectangles).
 
 from __future__ import annotations
 
+from functools import partial, update_wrapper
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphscope_spark.algorithms.triangles import _batch_intersect, _oriented
 from graphscope_spark.graph import LinkGraph, sorted_adjacency
+
+_WS_TYPE = pa.list_(pa.field("element", pa.int64()))
+
+
+def _common_neighbours(batches, min_ws):
+    """mapInArrow body: (u, v, nbrs_u, nbrs_v) → (u, v, ws) for the rows
+    whose sorted intersection ws has at least ``min_ws`` elements."""
+    for batch in batches:
+        row, w = _batch_intersect(batch)
+        k = np.bincount(row, minlength=batch.num_rows)
+        keep = k >= min_ws
+        offs = np.concatenate([[0], np.cumsum(k[keep])]).astype(np.int32)
+        ws = pa.ListArray.from_arrays(
+            pa.array(offs), pa.array(w[keep[row]], pa.int64()), type=_WS_TYPE
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.asarray(batch.column("u"))[keep], pa.int64()),
+                pa.array(np.asarray(batch.column("v"))[keep], pa.int64()),
+                ws,
+            ],
+            names=["u", "v", "ws"],
+        )
 
 
 def _closed_triangles(graph: LinkGraph, min_ws: int = 2):
@@ -37,12 +65,11 @@ def _closed_triangles(graph: LinkGraph, min_ws: int = 2):
     neighbourhoods (the triangle kernel of `algorithms/triangles.py`),
     plus the oriented edge DataFrame itself. ``min_ws=2`` (the 4-clique
     default) keeps only edges that can anchor a candidate pair; pass 1 to
-    enumerate every triangle (motif counting)."""
-    from graphscope_spark.algorithms.triangles import _oriented, _sorted_intersect
-
+    enumerate every triangle (motif counting). The intersection and the
+    ``min_ws`` cut happen in one Arrow pass, so each pair crosses into
+    Python once."""
     P = graph.num_partitions
-    oriented, _ = _oriented(graph)
-    oriented = oriented.persist()
+    oriented = _oriented(graph).persist()
     adj = sorted_adjacency(
         oriented.select(F.col("u").alias("src"), F.col("v").alias("dst")), P
     )
@@ -51,8 +78,10 @@ def _closed_triangles(graph: LinkGraph, min_ws: int = 2):
     closed = (
         oriented.join(adj_u, "u")
         .join(adj_v, "v")
-        .select("u", "v", _sorted_intersect("nbrs_u", "nbrs_v").alias("ws"))
-        .where(F.size("ws") >= min_ws)
+        .mapInArrow(
+            update_wrapper(partial(_common_neighbours, min_ws=min_ws), _common_neighbours),
+            "u long, v long, ws array<long>",
+        )
     )
     return closed, oriented
 

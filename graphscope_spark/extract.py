@@ -180,9 +180,16 @@ def extract_pages(pages: DataFrame) -> DataFrame:
 def edges_from_pages(pages: DataFrame) -> DataFrame:
     """url→url edge table: explode links, dedup. Keeps self-loops (dropped
     later where semantics require, e.g. triangles)."""
+    # explode_outer, not explode: for a plain explode Spark infers the filter
+    # ``size(links) > 0 AND links IS NOT NULL`` under the generator, and
+    # filter pushdown copies the UDF into it, so every page would run the
+    # link extractor twice (two ArrowEvalPython nodes). No filter is
+    # inferred for an outer generator; the null row it emits for a page
+    # without links is dropped above it, so the edge table is the same.
     return (
         extract_pages(pages)
-        .select(F.col("url").alias("src_url"), F.explode("links").alias("dst_url"))
+        .select(F.col("url").alias("src_url"), F.explode_outer("links").alias("dst_url"))
+        .where(F.col("dst_url").isNotNull())
         .distinct()
     )
 

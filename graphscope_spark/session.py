@@ -10,7 +10,9 @@ environment. Designed for a 1000-executor cluster; in this sandbox it runs
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -106,15 +108,14 @@ def apply_engine_conf(spark: SparkSession) -> None:
     _ship_package(spark)
 
 
-def _ship_package(spark: SparkSession) -> None:
-    """Ship this package to executors so pandas UDFs deserialize anywhere —
-    the in-process analog of ``spark-submit --py-files graphscope_spark.zip``
-    (how the north rule's cluster runs deploy). Idempotent per session."""
-    sc = spark.sparkContext
-    if getattr(sc, "_graphscope_spark_shipped", False):
-        return
+def _build_package_zip() -> str:
+    """Zip this package's sources into a fresh directory and return the
+    zip's path. Each call gets its own directory, so two sessions on one
+    host — say from two checkouts — never ship each other's code."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "graphscope_spark_pyfiles.zip")
+    out_dir = tempfile.mkdtemp(prefix="graphscope_spark_pyfiles_")
+    atexit.register(shutil.rmtree, out_dir, True)
+    zpath = os.path.join(out_dir, "graphscope_spark_pyfiles.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
@@ -122,5 +123,15 @@ def _ship_package(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     zf.write(full, rel)
-    sc.addPyFile(zpath)
+    return zpath
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Ship this package to executors so pandas UDFs deserialize anywhere —
+    the in-process analog of ``spark-submit --py-files graphscope_spark.zip``
+    (how the north rule's cluster runs deploy). Idempotent per session."""
+    sc = spark.sparkContext
+    if getattr(sc, "_graphscope_spark_shipped", False):
+        return
+    sc.addPyFile(_build_package_zip())
     sc._graphscope_spark_shipped = True

@@ -1,6 +1,7 @@
 """run_bsp as the one superstep loop: PageRank resume across fusion factors,
 exact round budgets, per-superstep job-tag metrics, and the release
-invariant of every run_bsp client (all on the 12-vertex fixture)."""
+invariant of every run_bsp client and of the triangle kernels (all on the
+12-vertex fixture)."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import urllib.request
 import numpy as np
 import pytest
 
-from graphscope_spark.algorithms import cdlp, pagerank, wcc
+from graphscope_spark.algorithms import avg_clustering, cdlp, pagerank, total_triangles, wcc
 from graphscope_spark.algorithms.hyperanf import neighborhood_function
 from graphscope_spark.algorithms.traversal import bfs, sssp
 from graphscope_spark.bsp import job_tag_metrics
@@ -110,6 +111,8 @@ CLIENTS = {
     "sssp": lambda g: _release(sssp(g, source=1)),
     "neighborhood_function": lambda g: neighborhood_function(g, t_max=3).collect(),
     "run_pregel": lambda g: _release(run_pregel(g, min_label_program())),
+    "total_triangles": total_triangles,
+    "avg_clustering": avg_clustering,
 }
 
 
